@@ -3,6 +3,7 @@ from __future__ import annotations
 import contextlib
 import os
 import sys
+from pathlib import Path
 
 import pytest
 
@@ -31,31 +32,74 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 #   property-fuzz boards) — all still in the full profile, which the
 #   builder runs at least once per round (boards recorded in
 #   OPTIMIZATION_r*.md).
-_SLOW_NODE_PREFIXES = (
-    "tests/test_oracle_dtypes.py::test_no_uncast_hugeint_in_any_oracle",
-    "tests/test_null_parity.py::test_timeskew_parity_sentinel[time_series_densify]",
-    "tests/test_jdbc_live.py",
-    "tests/test_cc_property.py::test_cc_labels_match_union_find",
-    "tests/test_packing_property.py::test_pack_fold_matches_simulator",
+#
+# Entries are node ids relative to this directory ("file.py::test" or a
+# prefix of one), so the profile is the same whichever directory pytest
+# runs from. An entry that matches no collected test (a renamed or
+# deleted test) fails collection instead of silently dropping out of
+# the list.
+_SLOW_NODES = (
+    "test_oracle_dtypes.py::test_no_uncast_hugeint_in_any_oracle",
+    "test_null_parity.py::test_timeskew_parity_sentinel[time_series_densify]",
+    "test_jdbc_live.py",
+    "test_cc_property.py::test_cc_labels_match_union_find",
+    "test_packing_property.py::test_pack_fold_matches_simulator",
     # plan-STRUCTURE pins for the streaming tier (~50s): streaming
     # CORRECTNESS still gates the default profile via test_streaming's
     # batch-equivalence boards and test_correctness's oracle rows
-    "tests/test_plan_budget.py::test_streaming_structure_budget",
+    "test_plan_budget.py::test_streaming_structure_budget",
 )
+# Parameter rule, not a name: the sf0.01 arm of any two-SF suite.
 _SLOW_PARAM = "[/root/testdata/sf0.01]"
+_TESTS_DIR = Path(__file__).resolve().parent
 
 
+def _local_id(item) -> str | None:
+    """The item's node id relative to this directory, or None for an
+    item collected from elsewhere."""
+    try:
+        rel = item.path.resolve().relative_to(_TESTS_DIR).as_posix()
+    except ValueError:
+        return None
+    _, sep, rest = item.nodeid.partition("::")
+    return rel + sep + rest
+
+
+@pytest.hookimpl(tryfirst=True)  # before -k/-m deselection narrows items
 def pytest_collection_modifyitems(config, items):
-    if os.environ.get("SPARK_GRAFT_FULL_TESTS") == "1":
-        return
-    mark = pytest.mark.skip(
+    full = os.environ.get("SPARK_GRAFT_FULL_TESTS") == "1"
+    skip = pytest.mark.skip(
         reason="slow board skipped in the default profile; "
         "set SPARK_GRAFT_FULL_TESTS=1 to run everything"
     )
+    matched = set()
+    files = set()
     for item in items:
-        nid = item.nodeid
-        if nid.startswith(_SLOW_NODE_PREFIXES) or _SLOW_PARAM in nid:
-            item.add_marker(mark)
+        lid = _local_id(item)
+        if lid is None:
+            continue
+        files.add(lid.split("::", 1)[0])
+        hits = [e for e in _SLOW_NODES if lid.startswith(e)]
+        matched.update(hits)
+        if not full and (hits or _SLOW_PARAM in lid):
+            item.add_marker(skip)
+    # A file narrowed on the command line ("file.py::test") may leave
+    # its listed entry uncollected by design; check the others.
+    narrowed = {
+        Path(arg.split("::", 1)[0]).resolve() for arg in config.args if "::" in arg
+    }
+    stale = []
+    for e in _SLOW_NODES:
+        f = e.split("::", 1)[0]
+        path = _TESTS_DIR / f
+        if e not in matched and (
+            not path.is_file() or (f in files and path not in narrowed)
+        ):
+            stale.append(e)
+    if stale:
+        raise pytest.UsageError(
+            f"tests/conftest.py _SLOW_NODES entries match no test: {stale}"
+        )
 
 
 @pytest.fixture(scope="session")

@@ -2,7 +2,7 @@
 their DuckDB oracles (order-insensitive rows+schema compare, the
 tests/compare.py harness == the driver's t2 check) at one or more SFs.
 
-Usage: python tools/verify_queries.py [--sf 0.01[,0.1]] name [name ...]
+Usage: python tools/verify_queries.py name [name ...] [--sf 0.01[,0.1]]
 
 VERDICT r13 item 8: the driver's rotating 50-query sample left 23 of
 28 rewritten queries unverified by the driver; this tool produces the
@@ -11,6 +11,7 @@ committed board for every query an optimization round touches.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -18,16 +19,33 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    """Registry names anywhere on the line plus ``--sf`` (a comma list
+    of scale factors); an unknown name is a usage error, not a
+    KeyError row on the board."""
+    from tiny_etl_multiproc_bigdata_spark.plans.registry import queries
+
+    parser = argparse.ArgumentParser(
+        description="Compare registry queries against their DuckDB oracles."
+    )
+    parser.add_argument("names", nargs="+", metavar="name")
+    parser.add_argument(
+        "--sf",
+        default="0.01",
+        type=lambda v: v.split(","),
+        help="comma-separated scale factors (default 0.01)",
+    )
+    args = parser.parse_intermixed_args(argv)
+    known = queries()
+    unknown = [n for n in args.names if n not in known]
+    if unknown:
+        parser.error(f"unknown registry names: {', '.join(unknown)}")
+    return args
+
+
 def main() -> None:
-    args = sys.argv[1:]
-    sfs = ["0.01"]
-    if args and args[0] == "--sf":
-        sfs = args[1].split(",")
-        args = args[2:]
-    names = args
-    if not names:
-        print("usage: verify_queries.py [--sf 0.01,0.1] name ...")
-        sys.exit(2)
+    args = parse_args()
+    names, sfs = args.names, args.sf
 
     from tiny_etl_multiproc_bigdata_spark.session import get_spark
     from tiny_etl_multiproc_bigdata_spark.plans.registry import (
