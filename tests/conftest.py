@@ -3,6 +3,7 @@ from __future__ import annotations
 import contextlib
 import os
 import sys
+import uuid
 from pathlib import Path
 
 import pytest
@@ -142,3 +143,20 @@ def confs(spark, **kv):
                 spark.conf.unset(key)
             else:
                 spark.conf.set(key, v)
+
+
+def count_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn ran on this thread), counted under
+    a private job group that is cleared afterwards. Streaming
+    micro-batches run under their query's own group and are not
+    counted."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description",
+                  "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(k, None)

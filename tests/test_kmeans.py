@@ -80,3 +80,27 @@ def test_kmeans_inertia_decreases(spark, sf_dir):
     out3 = ik.kmeans_lloyd(spark, sf_dir)
     inertia_3 = out3.agg(F.sum("inertia")).collect()[0][0]
     assert inertia_3 <= inertia_1 + 1e-6, (inertia_1, inertia_3)
+
+
+def test_kmeans_fixed_iters_survives_non_integer_shuffle_partitions(
+    spark, sf_dir, monkeypatch
+):
+    """Some managed runtimes hold ``auto`` in spark.sql.shuffle.partitions.
+    OSS Spark refuses to set that value, so the conf read is patched:
+    the group count falls back to the default parallelism, and the
+    result does not depend on the group count."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    import tiny_etl_multiproc_bigdata_spark.plans.ivf_kmeans as ik
+
+    expected = sorted(ik.kmeans_fixed_iters(spark, sf_dir).collect())
+    real_get = RuntimeConfig.get
+
+    def get(self, key, *args, **kwargs):
+        if key == "spark.sql.shuffle.partitions":
+            return "auto"
+        return real_get(self, key, *args, **kwargs)
+
+    monkeypatch.setattr(RuntimeConfig, "get", get)
+    assert ik._shuffle_partitions(spark) == spark.sparkContext.defaultParallelism
+    assert sorted(ik.kmeans_fixed_iters(spark, sf_dir).collect()) == expected

@@ -12,16 +12,21 @@ an edge exists when ≥ ``_CC_MIN_MATCH`` of the 8 signature components
 agree (estimated Jaccard ≥ 0.5).
 
 Scale shape (100 TB corpus):
-* Components via iterative min-label propagation — each round is one
-  shuffle join (labels → neighbors) + one partial/final min-agg, with
-  ``localCheckpoint`` truncating lineage per round. Rounds needed =
-  graph diameter, and near-dup clusters are shallow (dup clusters are
-  quasi-cliques since LSH buckets emit all intra-bucket pairs), so a
-  handful of rounds converges. The driver-side per-round ``.count()``
-  is a convergence scalar only — no row data crosses to the driver.
-  For adversarial diameters (long chains) the literature upgrade is
-  large-star/small-star (Kiveris et al., "Connected Components in
-  MapReduce and Beyond"), same building blocks.
+* Components via iterative min-label propagation. The first round
+  is join-free: the edge list is symmetric, so a node's first label is
+  ``least(src, min(dst))``, one aggregate over the edges, left lazy.
+  Each later round is one shuffle join (labels → neighbors) + one
+  partial/final min-agg that also carries the node's previous label
+  (``max(old)``) into the round's ``localCheckpoint`` (which truncates
+  lineage), so the convergence flag is a filter-count over the
+  checkpointed blocks — one job with no shuffle, and only a scalar
+  crosses to the driver. Rounds needed = graph diameter + 1, and
+  near-dup clusters are shallow (dup clusters are quasi-cliques since
+  LSH buckets emit all intra-bucket pairs), so a handful of rounds
+  converges. For adversarial diameters (long
+  chains) the literature upgrade is large-star/small-star (Kiveris et
+  al., "Connected Components in MapReduce and Beyond"), same building
+  blocks.
 * Survivors — one broadcast-able left join of the corpus against the
   (tiny relative to corpus) duplicate-membership table.
 """
@@ -76,12 +81,29 @@ def _unpersist_rdd_ids(spark: SparkSession, ids: set[int]) -> None:
             t._2().unpersist(False)
 
 
+def _count_rows(df: DataFrame) -> int:
+    """``df.count()`` in one job with no shuffle: counting the executed
+    plan's RDD sums per-partition sizes, where ``DataFrame.count()``
+    plans a partial count, a single-partition exchange and a final
+    count (two jobs under AQE)."""
+    return df._jdf.queryExecution().toRdd().count()
+
+
 def _cc_labels(edges: DataFrame) -> DataFrame:
-    """(src, dst) undirected edge list → (doc_id, group_id) where
+    """(src, dst) symmetric edge list → (doc_id, group_id) where
     group_id = min doc_id of the connected component. Iterates
     min-label propagation to convergence (bounded by _MAX_CC_ROUNDS;
     raises if the bound is hit unconverged — silently returning partial
-    labels would diverge from the exact transitive-closure oracle)."""
+    labels would diverge from the exact transitive-closure oracle).
+
+    Round 1 needs no join: every node starts labelled with itself, so
+    its first label is ``least(src, min(dst))`` over its own edges (the
+    list is symmetric, so every node is a ``src``). It always changes a
+    label when there are edges, so it is neither counted nor
+    checkpointed (see below). Each later round carries the previous
+    label through the union-min aggregate as ``old`` into the same
+    checkpoint, so its convergence flag is a filter-count over the
+    checkpointed blocks: one job with no shuffle."""
     # Materialize the edge list once: without this every round's msgs
     # join re-executes the whole upstream candidate-pair pipeline
     # (band explode + self-join + sig joins), twice per round via the
@@ -91,44 +113,49 @@ def _cc_labels(edges: DataFrame) -> DataFrame:
     # explicit release, up to _MAX_CC_ROUNDS copies of the label table
     # stay resident (ADVICE r02). Snapshot the persistent-RDD registry
     # around each checkpoint so the SUPERSEDED round's blocks can be
-    # freed as soon as the convergence count no longer needs them. The
-    # final round's frame (the return value) and the edge list stay
-    # pinned until the loop exits; edges are freed before returning.
+    # freed as soon as the next round's checkpoint is built (the
+    # convergence count reads only the new one). The final round's
+    # frame (the return value) and the edge list stay pinned until the
+    # loop exits; edges are freed before returning.
     before = _persistent_rdd_ids(spark)
     edges = edges.localCheckpoint(eager=True)
     edges_ids = _persistent_rdd_ids(spark) - before
 
-    before = _persistent_rdd_ids(spark)
+    # Round 1 is not checkpointed: round 2's checkpoint computes it in
+    # its own stages, over the small edge checkpoint, and that costs
+    # fewer jobs than a checkpoint of its own (12 vs 14 construction
+    # jobs for corpus_curation at sf0.01).
     labels = (
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("label", F.col("doc_id"))
-        .localCheckpoint(eager=True)
+        edges.groupBy("src")
+        .agg(F.least(F.col("src"), F.min("dst")).alias("label"))
+        .select(F.col("src").alias("doc_id"), "label")
     )
-    labels_ids = _persistent_rdd_ids(spark) - before
-    changed = 0
-    for _ in range(_MAX_CC_ROUNDS):
+    labels_ids: set[int] = set()
+    no_old = F.lit(None).cast(labels.schema["label"].dataType).alias("old")
+    changed = None  # round 1 is uncounted
+    for _ in range(_MAX_CC_ROUNDS - 1):
         msgs = edges.join(labels, edges["src"] == labels["doc_id"]).select(
-            F.col("dst").alias("doc_id"), F.col("label")
+            F.col("dst").alias("doc_id"), F.col("label"), no_old
         )
         before = _persistent_rdd_ids(spark)
         new_labels = (
-            labels.unionByName(msgs)
+            labels.select("doc_id", "label", F.col("label").alias("old"))
+            .unionByName(msgs)
             .groupBy("doc_id")
-            .agg(F.min("label").alias("label"))
+            .agg(F.min("label").alias("label"), F.max("old").alias("old"))
             .localCheckpoint(eager=True)
         )
         new_labels_ids = _persistent_rdd_ids(spark) - before
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
         _unpersist_rdd_ids(spark, labels_ids)
         labels, labels_ids = new_labels, new_labels_ids
+        changed = _count_rows(labels.filter(F.col("label") != F.col("old")))
         if changed == 0:
             break
+    if changed is None:  # a one-round bound: count round 1's changes
+        labels = labels.localCheckpoint(eager=True)
+        changed = _count_rows(
+            labels.filter(F.col("label") != F.col("doc_id"))
+        )
     _unpersist_rdd_ids(spark, edges_ids)
     if changed != 0:
         raise RuntimeError(
@@ -192,11 +219,13 @@ def dedup_cc_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     min doc_id) and ``group_size``. Docs with no near-dup partner are
     not emitted (they are their own trivial component).
 
-    Note: building this plan EXECUTES the label-propagation loop (the
-    eager per-round localCheckpoints run Spark jobs at construction
-    time); the returned frame is the converged labels plus one window.
-    Superseded rounds' checkpoint blocks are freed as the loop
-    advances (see ``_cc_labels``)."""
+    Note: building this plan EXECUTES the label-propagation loop at
+    construction time: the edge-list checkpoint, then per later round
+    one checkpoint that holds both the new and the previous label (the
+    second round's also computes the join-free first round) and one
+    filter-count over it as the convergence flag. The returned frame is the converged labels
+    plus one window. Superseded rounds' checkpoint blocks are freed as
+    the loop advances (see ``_cc_labels``)."""
     labels = _cc_labels(_near_dup_edges(spark, sf_dir))
     w = Window.partitionBy("group_id")
     return labels.withColumn("group_size", F.count("*").over(w))

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from tiny_etl_multiproc_bigdata_spark.catalog import read_parquet
 from tiny_etl_multiproc_bigdata_spark.functions.text import (
     ARABIC_DIACRITICS,
     basename_backwards,
@@ -46,7 +47,7 @@ from tiny_etl_multiproc_bigdata_spark.functions.text import (
 def flagship_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents(text, source) → words(word, word_len, word_truncated,
     file, words_count), per-(file, normalized-word) distinct."""
-    return words_from_docs(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    return words_from_docs(read_parquet(spark, f"{sf_dir}/documents.parquet"))
 
 
 def words_from_docs(docs: DataFrame) -> DataFrame:

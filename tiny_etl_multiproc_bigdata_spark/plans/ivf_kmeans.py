@@ -317,6 +317,16 @@ def _kmeans_oracle() -> str:
     )
 
 
+def _shuffle_partitions(spark: SparkSession) -> int:
+    """``spark.sql.shuffle.partitions`` as an int, or the default
+    parallelism where the deployment holds a non-integer value there
+    (``auto`` on some managed runtimes; OSS Spark refuses to set one)."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except ValueError:
+        return spark.sparkContext.defaultParallelism
+
+
 def _km_assign(spark: SparkSession, sf_dir: str):
     """Engine twin of ``_km_cte_prefix``: the quantized component table
     and the iteration-{_KM_ITERS} integer-Lloyd assignment frame
@@ -359,7 +369,7 @@ def _km_assign(spark: SparkSession, sf_dir: str):
     e = table(spark, sf_dir, "embeddings").filter(
         is_complete_vector(F.col("embedding"))
     )
-    n_groups = 8 * int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_groups = 8 * _shuffle_partitions(spark)
     qv = ckpt_hash(
         e.select(
             "vec_id",
